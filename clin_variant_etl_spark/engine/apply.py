@@ -48,7 +48,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
-from ..lake.table import CommitConflict, LakeTable, PartitionField
+from ..lake.table import CommitConflict, LakeTable, PartitionField, Snapshot
 from ..schemas import (
     EPOCH_CHECKPOINT_SCHEMA,
     INTERNAL_DELETED,
@@ -62,6 +62,8 @@ from .dedup import latest_by_key_auto, latest_by_key_join, latest_by_key_salted
 
 EVENT_META_COLS = ("lsn", "op", "event_ts", "epoch_hint")
 BUCKET_PARTITION = "bucket"
+# lookup_by's bound on the candidate keys it collects to the driver
+LOOKUP_BY_MAX_KEYS = 10_000
 
 
 def create_cdc_table(
@@ -272,9 +274,11 @@ class CdcPipeline:
 
         Layered pruning, each exact-or-conservative:
         1. bucket pruning — the sought keys' buckets are computed with the
-           table spec's OWN expression (one collect over len(keys) rows, so
-           the Python side can never disagree with the writer's murmur3);
-           only those buckets' manifest shards are even opened;
+           table spec's OWN expression, evaluated by Spark over a literal
+           frame of the keys cast to the key column's type (one collect over
+           len(keys) rows, so the Python side can never disagree with the
+           writer's hash; an int key hashed as a long would pick the wrong
+           bucket); only those buckets' manifest shards are even opened;
         2. bloom file skipping inside the bucket (``read(key_filter=…)``,
            populated when the pipeline runs with ``key_blooms=True``) — on a
            mor table a hot bucket holds base + many delta files, and the
@@ -285,19 +289,21 @@ class CdcPipeline:
         bloom can only over-keep files (no false negatives), and the row
         filter keeps every version of a sought key — so the resolve sees
         the key's full version set, same as a full read_state().
+
+        Every step reads one snapshot, resolved once on entry.  No step
+        starts a PySpark Python worker: engine hot paths run JVM plans only.
+        The one exception on those paths is the executor-side footer read
+        of a commit writing more than ``EXECUTOR_STATS_THRESHOLD`` (64)
+        files.
         """
         keys = list(keys)
-        if not keys:
-            return self.read_state(snapshot_id).limit(0)
         # spec + schema come from the PINNED snapshot: a time-traveled lookup
         # across a partition-spec change (migrate.update_partitioning) must
         # hash keys with the spec the snapshot's files were written under —
         # the current spec would prune every shard of the old layout
-        snap = (
-            self.table.snapshot(snapshot_id)
-            if snapshot_id
-            else self.table.current_snapshot()
-        )
+        snap = self._snapshot(snapshot_id)
+        if not keys:
+            return self.read_state(snap.snapshot_id).limit(0)
         field = next(
             (f for f in snap.schema.fields if f.name == self.key_col), None
         )
@@ -317,14 +323,15 @@ class CdcPipeline:
             and spec[0].source_col == self.key_col
             and spec[0].transform in ("bucket", "bucket_m3")
         ):
-            kdf = self.spark.createDataFrame(
-                [(k,) for k in keys],
-                T.StructType([T.StructField(self.key_col, field.dataType)]),
+            probe = self.spark.range(1).select(
+                F.explode(
+                    F.array(*[F.lit(k).cast(field.dataType) for k in keys])
+                ).alias(self.key_col)
             )
-            buckets = {r["b"] for r in kdf.select(spec[0].expr().alias("b")).collect()}
+            buckets = {r[0] for r in probe.select(spec[0].expr()).collect()}
             pf = {spec[0].name: buckets}
         df = self._read_resolved(
-            snapshot_id,
+            snap.snapshot_id,
             partition_filter=pf,
             key_filter={self.key_col: keys},
             row_filter=F.col(self.key_col).isin(keys),
@@ -350,18 +357,17 @@ class CdcPipeline:
            payload predicate is re-applied POST-resolve, which keeps
            exactly the keys whose LATEST version matches.
 
-        The candidate key set is collected to the driver — this is a POINT
-        lookup API (same contract as ``lookup``): values that select large
-        row fractions should use ``read_state().where(...)`` instead.
-        Without blooms on ``col`` the result is identical, just unpruned
-        (conservative read contract).
+        Both passes read the snapshot resolved once on entry, so a commit
+        landing between them cannot mix two table versions.  The candidate
+        key set is collected to the driver — this is a POINT lookup API
+        (same contract as ``lookup``): more than ``LOOKUP_BY_MAX_KEYS``
+        candidate keys raise, and such values should use
+        ``read_state().where(...)`` instead.  Without blooms on ``col`` the
+        result is identical, just unpruned (conservative read contract).
         """
         values = list(values)
-        snap = (
-            self.table.snapshot(snapshot_id)
-            if snapshot_id
-            else self.table.current_snapshot()
-        )
+        snap = self._snapshot(snapshot_id)
+        sid = snap.snapshot_id
         field = next((f for f in snap.schema.fields if f.name == col), None)
         if field is None:
             raise ValueError(
@@ -369,18 +375,32 @@ class CdcPipeline:
                 f"({[f.name for f in snap.schema.fields]})"
             )
         if not values:
-            return self.read_state(snapshot_id).limit(0)
+            return self.read_state(sid).limit(0)
         values = _coerce_probe_values(field, values)
         cand = (
-            self.table.read(self.spark, snapshot_id=snapshot_id, key_filter={col: values})
+            self.table.read(self.spark, snapshot_id=sid, key_filter={col: values})
             .where(F.col(col).isin(values))
             .select(self.key_col)
             .distinct()
         )
-        keys = [r[0] for r in cand.collect()]
+        keys = [r[0] for r in cand.limit(LOOKUP_BY_MAX_KEYS + 1).collect()]
+        if len(keys) > LOOKUP_BY_MAX_KEYS:
+            raise ValueError(
+                f"lookup_by: {col!r} values match more than {LOOKUP_BY_MAX_KEYS} "
+                f"keys; this is a point lookup — use "
+                f"read_state().where(F.col({col!r}).isin(...)) instead"
+            )
         if not keys:
-            return self.read_state(snapshot_id).limit(0)
-        return self.lookup(keys, snapshot_id=snapshot_id).where(F.col(col).isin(values))
+            return self.read_state(sid).limit(0)
+        return self.lookup(keys, snapshot_id=sid).where(F.col(col).isin(values))
+
+    def _snapshot(self, snapshot_id: int | None) -> Snapshot:
+        """The snapshot ``snapshot_id`` names, or the current one."""
+        return (
+            self.table.snapshot(snapshot_id)
+            if snapshot_id
+            else self.table.current_snapshot()
+        )
 
     def _read_resolved(
         self,
@@ -393,17 +413,15 @@ class CdcPipeline:
         keep-max-LSN resolve applied when deltas may exist.  Filters are
         applied BEFORE the resolve; callers must only pass filters that
         keep every version of any key they keep (key-level predicates)."""
+        snap = self._snapshot(snapshot_id)
         df = self.table.read(
             self.spark,
-            snapshot_id=snapshot_id,
+            snapshot_id=snap.snapshot_id,
             partition_filter=partition_filter,
             key_filter=key_filter,
         )
         if row_filter is not None:
             df = df.where(row_filter)
-        snap = (
-            self.table.snapshot(snapshot_id) if snapshot_id else self.table.current_snapshot()
-        )
         if self.apply_mode == "mor" or snap.properties.get("mor") == "1":
             df = latest_by_key_salted(df, self.key_col, INTERNAL_LAST_LSN, self.n_salts)
         return df
@@ -455,11 +473,7 @@ class CdcPipeline:
         sides of the pre/post join are pruned to the changed buckets, so
         cost stays O(changed buckets).
         """
-        to_snap = (
-            self.table.snapshot(to_snapshot_id)
-            if to_snapshot_id
-            else self.table.current_snapshot()
-        )
+        to_snap = self._snapshot(to_snapshot_id)
         fresh = to_snap.files
         if from_snapshot_id is not None:
             old_paths = {f["path"] for f in self.table.snapshot(from_snapshot_id).files}

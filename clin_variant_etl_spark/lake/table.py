@@ -873,6 +873,12 @@ class LakeTable:
         the row filter).  min/max cannot prune high-cardinality string keys
         (writers truncate string stats), which is exactly the point-lookup
         case blooms cover.
+
+        Like every engine hot path, a read never starts a PySpark Python
+        worker, even when pruning leaves no file (the empty frame comes from
+        a partition-less RDD).  The one Python-worker path in the lake is
+        the executor-side footer read of a commit writing more than
+        ``EXECUTOR_STATS_THRESHOLD`` files (``_collect_parquet_stats``).
         """
         if ref is not None:
             if snapshot_id is not None:
@@ -905,7 +911,7 @@ class LakeTable:
         if key_filter:
             files = [f for f in files if _blooms_may_match(f, key_filter)]
         if not files:
-            return spark.createDataFrame([], snap.schema)
+            return spark.createDataFrame(spark.sparkContext.emptyRDD(), snap.schema)
 
         cur = snap.schema
         by_schema: dict[int, list[str]] = {}

@@ -87,6 +87,15 @@ def _discover_event_schema(spark, events_dir: str):
         raise
 
 
+def _table_key(spec, key_col: str) -> str:
+    """The table's own key column: the bucket spec's source column on a
+    bucketed table (rows are keyed and resolved per that column), else
+    ``key_col``.  An identity or date partition column is not a key."""
+    if spec and spec[0].transform in ("bucket", "bucket_m3"):
+        return spec[0].source_col
+    return key_col
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="clin_variant_etl_spark.run")
     p.add_argument("--events-dir", default=None, help="change-event log root (parquet)")
@@ -201,11 +210,11 @@ def main(argv: list[str] | None = None) -> int:
         from .schemas import INTERNAL_LAST_LSN
 
         t = LakeTable(args.table)
-        # the fold key is the table's OWN bucketing column, never a CLI
-        # default: folding on the wrong key would max_by-collapse distinct
-        # rows that share the wrong column's value — silent data loss
-        spec = t.partition_spec
-        key = spec[0].source_col if spec else args.key_col
+        # on a bucketed table the fold key is the table's OWN bucketing
+        # column, never a CLI default: folding on the wrong key would
+        # max_by-collapse distinct rows that share the wrong column's value
+        # — silent data loss
+        key = _table_key(t.partition_spec, args.key_col)
         fold = (
             (key, INTERNAL_LAST_LSN)
             if args.apply_mode == "mor" and not args.no_fold
@@ -236,13 +245,12 @@ def main(argv: list[str] | None = None) -> int:
     if args.mode == "lookup":
         import json
 
-        # Like maintain mode, the lookup key is the table's OWN bucketing
-        # column: resolving keep-max-LSN on a CLI-default key would silently
-        # return wrong/missing rows.  Error (not override) on a mismatch the
-        # caller typed explicitly.
-        spec = LakeTable(args.table).partition_spec
-        key = spec[0].source_col if spec else args.key_col
-        if spec and args.key_col != p.get_default("key_col") and args.key_col != key:
+        # Like maintain mode, the lookup key of a bucketed table is its OWN
+        # bucketing column: resolving keep-max-LSN on a CLI-default key
+        # would silently return wrong/missing rows.  Error (not override)
+        # on a mismatch the caller typed explicitly.
+        key = _table_key(LakeTable(args.table).partition_spec, args.key_col)
+        if args.key_col not in (p.get_default("key_col"), key):
             p.error(
                 f"--key-col {args.key_col!r} disagrees with the table's bucket "
                 f"spec key {key!r}; lookup always uses the table's own key"
@@ -283,8 +291,7 @@ def main(argv: list[str] | None = None) -> int:
         # fold key = the table's OWN bucketing column (same rule as
         # maintain/lookup); idempotent under foreachBatch redelivery —
         # see StreamingCdc.after_batch crash contract
-        spec = pipe.table.partition_spec
-        fold_key = spec[0].source_col if spec else args.key_col
+        fold_key = _table_key(pipe.table.partition_spec, args.key_col)
 
         def after_batch(pipeline, epoch_id, res):
             auto_fold(

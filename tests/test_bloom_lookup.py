@@ -269,3 +269,145 @@ def test_lookup_by_version_history_exactness(spark, payload_bloom_pipe):
     live = state[doc]
     got_live = {r["doc_id"] for r in pipe.lookup_by("n_tok", [live]).collect()}
     assert doc in got_live
+
+
+@pytest.mark.parametrize("transform", ["bucket_m3", "bucket"])
+@pytest.mark.parametrize("key_type", ["int", "long"])
+def test_numeric_key_lookups_match_filtered_state(spark, tmp_path, key_type, transform):
+    """Lookups on int- and long-keyed tables under both bucket transforms.
+    The bucket probe hashes each key cast to the key column's type: a
+    small long key hashed as an int literal lands in the wrong bucket, and
+    the lookup would silently miss the row."""
+    from pyspark.sql import types as T
+
+    from clin_variant_etl_spark.engine.apply import BUCKET_PARTITION
+    from clin_variant_etl_spark.lake.table import LakeTable, PartitionField
+    from clin_variant_etl_spark.schemas import INTERNAL_DELETED, INTERNAL_LAST_LSN
+
+    kt = T.IntegerType() if key_type == "int" else T.LongType()
+    schema = T.StructType(
+        [
+            T.StructField("k", kt, False),
+            T.StructField("v", T.StringType(), True),
+            T.StructField(INTERNAL_LAST_LSN, T.LongType(), True),
+            T.StructField(INTERNAL_DELETED, T.BooleanType(), True),
+        ]
+    )
+    LakeTable.create(
+        str(tmp_path / "t"), schema, [PartitionField(BUCKET_PARTITION, "k", transform, 4)]
+    )
+    pipe = CdcPipeline(
+        spark, str(tmp_path / "t"), key_col="k", apply_mode="mor",
+        key_blooms=True, bloom_cols=("v",),
+    )
+    ev_schema = T.StructType(
+        [
+            T.StructField("lsn", T.LongType(), False),
+            T.StructField("op", T.StringType(), False),
+            T.StructField("k", kt, False),
+            T.StructField("v", T.StringType(), True),
+        ]
+    )
+    # small keys (where int and long hashes differ) and, for long, keys
+    # past the int range
+    keys = [i * 7 - 50 for i in range(40)]
+    if key_type == "long":
+        keys += [(1 << 40) + i for i in range(10)]
+    epoch0 = [(i, "I", k, f"v{k % 5}") for i, k in enumerate(keys)]
+    epoch1 = [
+        (1000 + i, "D" if i % 4 == 0 else "U", k, f"v{k % 3}")
+        for i, k in enumerate(keys[::3])
+    ]
+    for ep, rows in enumerate((epoch0, epoch1)):
+        pipe.apply_epoch(spark.createDataFrame(rows, ev_schema), epoch_id=ep)
+
+    state = {r["k"]: r["v"] for r in pipe.read_state().collect()}
+    deleted = [k for k in keys if k not in state]
+    assert deleted  # the probe covers a dead key
+    probe = keys[:3] + keys[-3:] + deleted[:2] + [123456]
+    for k in probe:
+        got = [(r["k"], r["v"]) for r in pipe.lookup([k]).collect()]
+        assert got == ([(k, state[k])] if k in state else []), k
+    got = sorted((r["k"], r["v"]) for r in pipe.lookup(probe).collect())
+    assert got == sorted((k, state[k]) for k in probe if k in state)
+    # CLI callers pass strings; they are coerced to the key type
+    assert pipe.lookup([str(keys[1])]).count() == (keys[1] in state)
+
+    for vals in (["v0"], ["v1", "v2"]):
+        got = sorted(r["k"] for r in pipe.lookup_by("v", vals).collect())
+        assert got == sorted(k for k, v in state.items() if v in vals)
+
+
+@pytest.fixture
+def small_bloom_pipe(spark, tmp_path):
+    cfg = EventGenConfig(n_docs=40, n_events=300, n_epochs=2, seed=13)
+    write_events_by_epoch(generate_change_events(cfg), str(tmp_path / "events"))
+    create_cdc_table(str(tmp_path / "docs"), BASE_DOCS_SCHEMA, n_buckets=4)
+    pipe = CdcPipeline(
+        spark, str(tmp_path / "docs"), apply_mode="mor",
+        key_blooms=True, bloom_cols=("n_tok",),
+    )
+    for ep in range(2):
+        pipe.apply_epoch(spark.read.parquet(f"{tmp_path}/events/epoch={ep}"), epoch_id=ep)
+    return pipe
+
+
+def _most_common_n_tok(pipe) -> tuple[int, list[str]]:
+    """The live n_tok value held by the most keys, and those keys."""
+    by_val: dict[int, list[str]] = {}
+    for r in pipe.read_state().select("doc_id", "n_tok").collect():
+        by_val.setdefault(r["n_tok"], []).append(r["doc_id"])
+    val = max(sorted(by_val), key=lambda v: len(by_val[v]))
+    return val, sorted(by_val[val])
+
+
+def test_lookup_by_pins_one_snapshot_across_passes(spark, small_bloom_pipe, monkeypatch):
+    """A commit landing between the candidate scan and the key lookup must
+    not leak into the result: both passes read the snapshot current when
+    lookup_by was called.  The racing commit deletes every key the value
+    matches, so a key pass on the new snapshot would return nothing."""
+    from clin_variant_etl_spark.schemas import CHANGE_EVENTS_SCHEMA
+
+    pipe = small_bloom_pipe
+    val, want = _most_common_n_tok(pipe)
+    pinned = pipe.table.current_snapshot().snapshot_id
+    max_lsn = pipe._read_resolved().agg(F.max("_last_lsn")).collect()[0][0]
+    deletes = spark.createDataFrame(
+        [
+            {"lsn": max_lsn + 1 + i, "op": "D", "doc_id": d, "tokens": None,
+             "n_tok": None, "source": None, "event_ts": None, "epoch_hint": None}
+            for i, d in enumerate(want)
+        ],
+        CHANGE_EVENTS_SCHEMA,
+    )
+    key_lookup = pipe.lookup
+
+    def racing_lookup(keys, snapshot_id=None):
+        pipe.apply_epoch(deletes, epoch_id=2)
+        return key_lookup(keys, snapshot_id=snapshot_id)
+
+    monkeypatch.setattr(pipe, "lookup", racing_lookup)
+    got = sorted(r["doc_id"] for r in pipe.lookup_by("n_tok", [val]).collect())
+    assert pipe.table.current_snapshot().snapshot_id != pinned  # the race ran
+    assert got == want
+    monkeypatch.undo()
+    assert pipe.lookup_by("n_tok", [val]).count() == 0
+    assert pipe.lookup_by("n_tok", [val], snapshot_id=pinned).count() == len(want)
+
+
+def test_lookup_by_candidate_limit_raises(spark, small_bloom_pipe, monkeypatch):
+    """The candidate-key collect is bounded: past LOOKUP_BY_MAX_KEYS keys,
+    lookup_by raises and points at read_state().where(...)."""
+    from clin_variant_etl_spark.engine import apply as apply_mod
+
+    pipe = small_bloom_pipe
+    val, want = _most_common_n_tok(pipe)
+    assert len(want) >= 2
+    # the candidates (keys with ANY version holding val) include every live
+    # holder, so a limit one below the live count must trip
+    monkeypatch.setattr(apply_mod, "LOOKUP_BY_MAX_KEYS", len(want) - 1)
+    with pytest.raises(ValueError, match=r"read_state\(\)\.where"):
+        pipe.lookup_by("n_tok", [val])
+    # the fixture table holds 40 keys in all
+    monkeypatch.setattr(apply_mod, "LOOKUP_BY_MAX_KEYS", 40)
+    assert pipe.lookup_by("n_tok", [val]).count() == len(want)

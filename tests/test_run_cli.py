@@ -200,3 +200,46 @@ def test_lookup_by_col_mode(spark, cli_env, capsys):
                  "--keys", str(val), "--by-col", "n_tok"]) == 0
     out = [json.loads(line) for line in capsys.readouterr().out.strip().splitlines()]
     assert sorted(r["doc_id"] for r in out) == want
+
+
+def test_identity_partitioned_table_uses_cli_key(spark, tmp_path, capsys):
+    """Only a bucket spec names the table's key.  On a table partitioned by
+    identity on a payload column (``source``), lookup and the maintain fold
+    must key on ``--key-col``: keyed on ``source``, the lookup finds nothing
+    and the mor fold collapses each source to a single row."""
+    import json
+
+    from pyspark.sql import types as T
+
+    from clin_variant_etl_spark.lake.table import PartitionField
+    from clin_variant_etl_spark.schemas import (
+        BASE_DOCS_SCHEMA,
+        INTERNAL_DELETED,
+        INTERNAL_LAST_LSN,
+    )
+
+    path = str(tmp_path / "by_source")
+    schema = T.StructType(
+        BASE_DOCS_SCHEMA.fields
+        + [
+            T.StructField(INTERNAL_LAST_LSN, T.LongType(), True),
+            T.StructField(INTERNAL_DELETED, T.BooleanType(), True),
+        ]
+    )
+    t = LakeTable.create(path, schema, [PartitionField("source", "source", "identity")])
+    rows = [(f"d{i}", [i], 1, f"src-{i % 2}", i, False) for i in range(6)]
+    files = t.write_data_files(
+        spark.createDataFrame(rows, schema),
+        t.current_snapshot().schema_id,
+        t.partition_spec,
+    )
+    t.commit("append", files)
+
+    capsys.readouterr()
+    assert main(["--mode", "lookup", "--table", path, "--keys", "d1,d2"]) == 0
+    out = [json.loads(line) for line in capsys.readouterr().out.strip().splitlines()]
+    assert sorted(r["doc_id"] for r in out) == ["d1", "d2"]
+
+    assert main(["--mode", "maintain", "--table", path, "--apply-mode", "mor"]) == 0
+    state = CdcPipeline(spark, path, apply_mode="mor").read_state()
+    assert sorted(r["doc_id"] for r in state.collect()) == [f"d{i}" for i in range(6)]
